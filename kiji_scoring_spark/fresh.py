@@ -55,24 +55,52 @@ from .registry import FreshenerRegistry, TableLayout, load_class, parse_column
 #: Batch jobs amortize over many rows, so the default budget is larger.
 DEFAULT_TIMEOUT_MS = 10_000
 
+#: how long after the driver's deadline a pandas producer stops itself in
+#: its Python worker (``PandasProducer.make_map_fn(deadline=...)``). The
+#: driver's job-group cancel lands first, so the tasks still end as KILLED,
+#: not failed, and log no ERROR lines.
+_PRODUCER_GRACE_S = 0.1
 
-def _drain_job_group(sc, group: str, timeout_s: float = 15.0) -> bool:
+#: after a cancel, how long to wait for the freshen thread to see its job
+#: fail, then how long and how often to poll for the killed tasks to end
+_CANCEL_JOIN_S = 5.0
+_DRAIN_TIMEOUT_S = 15.0
+_DRAIN_POLL_S = 0.05
+
+
+def _drain_job_group(sc, group: str, timeout_s: float = _DRAIN_TIMEOUT_S) -> bool:
     """Block until every task of ``group``'s jobs has actually TERMINATED
     (not merely been told to die), bounded by ``timeout_s``.
 
-    Why this exists (r16, root-caused from a real failure): cancelJobGroup
-    is asynchronous — it sets the kill flag and returns while the killed
-    tasks' Python workers are still being destroyed by PythonRunner's
-    monitor thread (up to ``spark.python.task.killTimeout`` = 2 s later).
-    With ``spark.python.worker.reuse=true`` a job submitted during that
-    drain window can be handed a worker whose channel the monitor closes
-    mid-read — java.nio.channels.CancelledKeyException in the NEXT,
-    perfectly healthy query (reproduced: a cancelled 30 s pandas producer
-    poisoned the next test's parquet write one second later). Draining also
-    keeps this query's accumulators referenced until the last task
-    completion has reported, which is what prevents the DAGScheduler
-    "attempted to access non-existent accumulator" ERROR spam from
-    late completions after the plan has been garbage collected.
+    cancelJobGroup is asynchronous: it sets the tasks' kill flag and
+    returns. A pandas task blocked in its Python worker ends in one of two
+    ways:
+
+    - Usually the worker stops itself: ``freshen_with_timeout`` hands the
+      producer a deadline just past its own, and the worker raises there,
+      exits and is never pooled. The JVM sees the kill flag and reports the
+      task KILLED within a poll or two of this loop.
+    - A producer stuck in native code that ignores the signal waits for
+      PythonRunner's monitor thread. It polls the kill flag every 2 s and
+      then waits ``spark.python.task.killTimeout`` (2 s) before it destroys
+      the worker, so such a task ends up to about 4 s after the cancel.
+
+    Either way a new job must not start before the killed tasks end. With
+    ``spark.python.worker.reuse=true`` a job submitted while the monitor
+    is still destroying a worker can be handed that worker mid-read:
+    java.nio.channels.CancelledKeyException in the NEXT, healthy query
+    (reproduced: a cancelled 30 s pandas producer poisoned the next test's
+    parquet write one second later). Draining also keeps this query's
+    accumulators referenced until the last task completion has reported,
+    which prevents the DAGScheduler "attempted to access non-existent
+    accumulator" ERROR spam from late completions after the plan has been
+    garbage collected.
+
+    Residual window: ``numActiveTasks == 0`` is reported when the task
+    ends. A deadline-stopped worker has raised before that and is closed
+    with its task, never pooled, so nothing is left behind. A worker the
+    monitor destroys is destroyed asynchronously to that report, so only
+    for producers stuck in native code can a short window remain.
 
     Returns True when the group drained, False on deadline (the caller
     keeps its promptness contract either way — a producer stuck in
@@ -95,7 +123,7 @@ def _drain_job_group(sc, group: str, timeout_s: float = 15.0) -> bool:
             return True
         if time.monotonic() >= deadline:
             return False
-        time.sleep(0.05)
+        time.sleep(_DRAIN_POLL_S)
 
 
 @dataclass
@@ -251,7 +279,12 @@ class FreshTableReader:
             out._kss_sql = f"`{flat}`"
         return out
 
-    def _freshen_column(self, df: DataFrame, cap: Freshener, as_of_ms: int) -> DataFrame:
+    def _freshen_column(
+        self, df: DataFrame, cap: Freshener, as_of_ms: int, deadline: float | None = None
+    ) -> DataFrame:
+        """Freshen one capsule's column. ``deadline`` (epoch seconds)
+        stops a pandas producer inside its Python worker; expression and
+        MLlib producers run in the JVM and stop at the next row on cancel."""
         from pyspark.sql.types import DoubleType, StructField, StructType
 
         fam, qual = parse_column(cap.column)
@@ -310,7 +343,7 @@ class FreshTableReader:
                 list(scored_in.schema.fields) + [StructField("__score__", DoubleType())]
             )
             scored = scored_in.mapInPandas(
-                producer.make_map_fn("__score__"), schema=out_schema
+                producer.make_map_fn("__score__", deadline), schema=out_schema
             ).select(self.key_col, "__score__")
             df = df.join(scored, on=self.key_col, how="left")
             score_col = F.col("__score__")
@@ -393,6 +426,11 @@ class FreshTableReader:
           branch (``:703-708``). Per-column granularity matches the
           reference, whose freshness futures are per attached column.
 
+        A pandas producer also stops itself at the deadline inside its
+        Python worker (``PandasProducer.make_map_fn(deadline=...)``), so
+        the fallback returns shortly after the budget rather than when
+        Spark's monitor thread gets round to destroying the worker.
+
         Each per-column write supersedes the previous one, which is deleted
         as soon as the next column materializes — only the newest write
         (the one the returned DataFrame reads) survives, so repeated calls
@@ -418,6 +456,9 @@ class FreshTableReader:
             result: dict[str, object] = {}
             error: list[BaseException] = []
 
+            # the producer's own deadline, as wall-clock time for its worker
+            producer_deadline = time.time() + remaining + _PRODUCER_GRACE_S
+
             def run(cap=cap, i=i, group=group):
                 try:
                     # interruptOnCancel stays FALSE (r15): thread-interrupting
@@ -425,18 +466,17 @@ class FreshTableReader:
                     # a reuse pool then hands the poisoned worker to a later
                     # pandas stage (CancelledKeyException in PythonRunner —
                     # reproduced r-early; the old mitigation disabled worker
-                    # reuse engine-wide, ~25-35% on Arrow-heavy paths). With
-                    # the plain cancel, PythonRunner's monitor thread sees the
-                    # task-killed flag and DESTROYS the in-flight worker
-                    # instead of pooling it. That alone proved insufficient
-                    # (r16): the destruction is ASYNC, so the caller must not
-                    # start new jobs until the cancelled group drains — see
-                    # _drain_job_group at the cancel site below. Cancellation
-                    # promptness is pinned by test_timeout_returns_stale's
-                    # wall-clock bound; pool health by
+                    # reuse engine-wide, ~25-35% on Arrow-heavy paths).
+                    # Instead a pandas producer stops itself in its worker at
+                    # producer_deadline, just after the cancel below has set
+                    # the kill flag: the task ends KILLED and the worker
+                    # exits rather than returning to the pool. The caller
+                    # still drains the group before going on, see
+                    # _drain_job_group. Promptness is pinned by
+                    # test_timeout_fallback_is_prompt; pool health by
                     # test_timeout_storm_then_arrow_stage.
                     sc.setJobGroup(group, f"freshen {cap.column}")
-                    out = self._freshen_column(current, cap, as_of_ms)
+                    out = self._freshen_column(current, cap, as_of_ms, producer_deadline)
                     result["df"], result["path"] = self._materialize(
                         out, f"as_of={as_of_ms}/col={i}"
                     )
@@ -446,16 +486,21 @@ class FreshTableReader:
             t = threading.Thread(target=run, daemon=True)
             t.start()
             t.join(remaining)
-            if t.is_alive():
+            # a job that failed once its producer's deadline had passed was
+            # stopped by that deadline: its worker raised before the cancel
+            # landed, so this is a timeout, not a producer error
+            if t.is_alive() or (
+                error and time.monotonic() >= deadline + _PRODUCER_GRACE_S
+            ):
                 sc.cancelJobGroup(group)
-                t.join(5.0)
+                t.join(_CANCEL_JOIN_S)
                 # drain barrier (r16): cancelJobGroup is async — wait for
                 # the killed tasks to actually terminate before handing
                 # control back, or the caller's next Python-worker stage
-                # races the monitor thread's worker destruction (the
-                # poisoned-pool CancelledKeyException) and late task
-                # completions spam "non-existent accumulator" ERRORs
-                # after the cancelled plan is GC'd.
+                # can race a worker's destruction (the poisoned-pool
+                # CancelledKeyException) and late task completions spam
+                # "non-existent accumulator" ERRORs after the cancelled
+                # plan is GC'd.
                 _drain_job_group(sc, group)
                 return (current, False) if partial else (self.df, False)
             if error:

@@ -25,7 +25,11 @@ policy stores mask producer stores with the same name
 
 from __future__ import annotations
 
+import signal
+import threading
+import time
 from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
@@ -94,23 +98,75 @@ class PandasProducer(Producer):
         self.output_column = output_column
         self.required_stores = required_stores or {}
 
-    def make_map_fn(self, score_col: str):
+    def make_map_fn(self, score_col: str, deadline: float | None = None):
         """Build the mapInPandas function: per-partition setup/cleanup
-        around per-batch scoring (the iterator-UDF lifecycle pattern)."""
+        around per-batch scoring (the iterator-UDF lifecycle pattern).
+
+        ``deadline`` (epoch seconds) stops the producer inside its Python
+        worker: past it, ``ProducerDeadlineExceeded`` is raised wherever the
+        worker's Python code is, including a ``time.sleep`` or a slow
+        ``setup``. See ``_deadline_alarm``."""
         batch_fn, setup, cleanup = self._batch_fn, self._setup, self._cleanup
 
         def map_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            state = setup() if setup else None
-            try:
-                for pdf in batches:
-                    out = pdf.copy()
-                    out[score_col] = batch_fn(pdf)
-                    yield out
-            finally:
-                if cleanup:
-                    cleanup(state)
+            with _deadline_alarm(deadline):
+                state = setup() if setup else None
+                try:
+                    for pdf in batches:
+                        out = pdf.copy()
+                        out[score_col] = batch_fn(pdf)
+                        yield out
+                finally:
+                    if cleanup:
+                        cleanup(state)
 
         return map_fn
+
+
+class ProducerDeadlineExceeded(BaseException):
+    """Raised inside a producer when its freshen deadline passes. Like
+    ``KeyboardInterrupt`` it is not an ``Exception``, so a producer's own
+    ``except Exception`` cannot swallow the stop."""
+
+
+@contextmanager
+def _deadline_alarm(deadline: float | None):
+    """Raise ``ProducerDeadlineExceeded`` in the block once the wall clock
+    passes ``deadline`` (epoch seconds; a wall clock because the block runs
+    in an executor's Python worker, not in the driver process).
+
+    A one-shot ``SIGALRM`` timer interrupts blocking calls and Python code
+    alike. PySpark's worker exits on any exception escaping the task
+    (``pyspark/worker.py``), so a deadline-stopped worker is never returned
+    to the reuse pool. On exit the timer is cleared and the previous
+    ``SIGALRM`` handler restored, so a pooled worker never carries an armed
+    timer into its next task. Without ``setitimer`` (Windows) or off the
+    main thread (signals are main-thread only) nothing is armed, and the
+    block runs to completion or until Spark kills the task."""
+    if (
+        deadline is None
+        or not hasattr(signal, "setitimer")
+        or threading.current_thread() is not threading.main_thread()
+    ):
+        yield
+        return
+
+    def on_alarm(signum, frame):
+        # restore first: the alarm fires once, and may land inside the
+        # finally below before it has restored the handler itself
+        signal.signal(signal.SIGALRM, previous)
+        raise ProducerDeadlineExceeded(f"producer passed its deadline {deadline:.3f}")
+
+    # None means a handler installed outside Python; SIG_DFL is the nearest
+    previous = signal.getsignal(signal.SIGALRM) or signal.SIG_DFL
+    signal.signal(signal.SIGALRM, on_alarm)
+    try:
+        # a deadline already passed still fires (setitimer(0) would disarm)
+        signal.setitimer(signal.ITIMER_REAL, max(deadline - time.time(), 1e-6))
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
 
 
 class MLlibProducer(Producer):

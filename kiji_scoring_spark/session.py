@@ -43,12 +43,15 @@ _DEFAULT_CONF: dict[str, str] = {
     # poisoned-pool hazard that disabled it (a thread-INTERRUPTED freshen
     # killed Arrow workers mid-protocol and the pool handed them to later
     # pandas stages — CancelledKeyException) was scoped to
-    # freshen_with_timeout's interruptOnCancel=True, which is gone: the
-    # plain job-group cancel lets PythonRunner's monitor thread destroy
-    # the in-flight worker instead of pooling it. Measured on the
-    # Arrow-heavy multimodal paths: per-task forked workers cost 25-35%
-    # (module imports per fork), worker reuse amortizes them per
-    # executor lifetime — at any scale, not just locally.
+    # freshen_with_timeout's interruptOnCancel=True, which is gone. A
+    # timed-out pandas producer now stops itself at its deadline and its
+    # worker exits instead of returning to the pool; only a producer stuck
+    # in native code still waits for PythonRunner's monitor thread to
+    # destroy its worker (2 s poll + killTimeout), and the freshen drain
+    # barrier covers both. Measured on the Arrow-heavy multimodal paths:
+    # per-task forked workers cost 25-35% (module imports per fork),
+    # worker reuse amortizes them per executor lifetime — at any scale,
+    # not just locally.
     "spark.python.worker.reuse": "true",
     "spark.ui.enabled": "false",
     # saveAsTable targets (bucketed tables for co-located joins) go to a

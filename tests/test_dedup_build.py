@@ -4,6 +4,7 @@ the signature values are oracle-hash-pinned, so only the driver-side
 build mechanism may change. Each test reconstructs the pre-r16 Column
 build inline and compares canonicalized analyzed plans plus rows."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kiji_scoring_spark.operators.dedup import (
@@ -182,3 +183,20 @@ def test_cross_bucket_pairs_plan_and_rows_unchanged(spark):
     old = _legacy_cross_bucket_pairs(buckets, "a", "b")
     assert _canon(new) == _canon(old)
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+
+
+@pytest.mark.parametrize("bad", ["doc`id", "doc.id", "doc id", ""])
+def test_builders_reject_unquotable_column_names(bad):
+    """The parsed-string builders splice names into backticks: a name
+    with a backtick, a dot or a space is refused before any plan is
+    built (the DataFrame is never touched, so None stands in for it)."""
+    with pytest.raises(ValueError, match="plain identifier"):
+        minhash_signature_df(None, bad, "text")
+    with pytest.raises(ValueError, match="plain identifier"):
+        minhash_signature_df(None, "doc_id", bad)
+    with pytest.raises(ValueError, match="plain identifier"):
+        bucket_pairs(None, bad)
+    with pytest.raises(ValueError, match="plain identifier"):
+        cross_bucket_pairs(None, "a", bad)
+    with pytest.raises(ValueError, match="plain identifier"):
+        cross_bucket_pairs(None, bad, "b")

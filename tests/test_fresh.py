@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from kiji_scoring_spark import fresh as fresh_mod
 from kiji_scoring_spark import model
 from kiji_scoring_spark.fresh import FreshTableReader
 from kiji_scoring_spark.policies import AlwaysFreshen, NeverFreshen, ShelfLife
@@ -24,6 +25,10 @@ from kiji_scoring_spark.registry import FreshenerRegistry, TableLayout
 
 DAY_MS = 86_400_000
 NOW_MS = 1_000_000_000  # injected clock — no wall time in assertions
+#: slack on top of the code's own deadlines in wall-clock bounds: a task or
+#: Python worker that starts only after the deadline (it then stops at
+#: once), and the killed tasks' report reaching the status tracker
+LAUNCH_MARGIN_S = 1.0
 
 
 class IncrementVisitsProducer(ExpressionProducer):
@@ -182,15 +187,66 @@ def test_timeout_returns_stale(spark):
         spark, df, "info:visits", AlwaysFreshen(), "",
         f"{__name__}.SlowPandasProducer",
     )
+    budget_ms = 3000
     t0 = time.monotonic()
-    out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=3000)
-    # budget 3 s + monitor-kill latency (spark.python.task.killTimeout 2 s)
-    # + the r16 drain barrier; 15 s bounds a near-worst-case regression in
-    # cancellation promptness (ADVICE r15 — the old 25 s bound was loose
-    # enough for a regression to pass unseen)
-    assert time.monotonic() - t0 < 15
+    out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=budget_ms)
+    # worst case the code allows: budget, then the join on the cancelled
+    # freshen thread, then the drain barrier's own deadline. The common
+    # path is pinned much tighter by test_timeout_fallback_is_prompt.
+    worst_s = (
+        budget_ms / 1000 + fresh_mod._CANCEL_JOIN_S + fresh_mod._DRAIN_TIMEOUT_S
+        + LAUNCH_MARGIN_S
+    )
+    assert time.monotonic() - t0 < worst_s
     assert fresh is False
     assert visits(out) == {"foo": 10, "bar": 100, "felix": None}  # stale values
+
+
+def test_timeout_fallback_is_prompt(spark):
+    """The stale fallback comes back just after the budget: the pandas
+    producer stops itself in its Python worker at the deadline, instead of
+    waiting for PythonRunner's monitor thread (2 s poll + 2 s
+    killTimeout). The reference asserts a 150 ms fallback while producers
+    sleep (TestInternalFreshKijiTableReader.java:623-638)."""
+    df = user_counter_df(spark)
+    reader = make_reader(
+        spark, df, "info:visits", AlwaysFreshen(), "",
+        f"{__name__}.SlowPandasProducer",
+    )
+    budget_ms = 1000
+    t0 = time.monotonic()
+    out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=budget_ms)
+    elapsed = time.monotonic() - t0
+    bound = (
+        budget_ms / 1000 + fresh_mod._PRODUCER_GRACE_S + fresh_mod._DRAIN_POLL_S
+        + LAUNCH_MARGIN_S
+    )
+    assert elapsed < bound, f"fallback took {elapsed:.2f} s, bound {bound:.2f} s"
+    assert fresh is False
+    assert visits(out) == {"foo": 10, "bar": 100, "felix": None}
+
+
+@pytest.mark.parametrize("allow_partial", [False, True])
+def test_worker_deadline_before_cancel_still_falls_back(spark, monkeypatch, allow_partial):
+    """Race: the producer's worker reaches its deadline BEFORE the driver
+    cancels (a negative grace forces it), so the job fails instead of
+    being killed. That is still a timeout: the stale or partial fallback
+    comes back, not the producer's exception."""
+    budget_ms = 8000
+    # the slow column's producer deadline lands about 1 s into the call,
+    # well before the driver's own deadline
+    monkeypatch.setattr(fresh_mod, "_PRODUCER_GRACE_S", -(budget_ms / 1000 - 1.0))
+    reader = two_column_reader(spark, allow_partial=allow_partial)
+    t0 = time.monotonic()
+    out, fresh = reader.freshen_with_timeout(NOW_MS, timeout_ms=budget_ms)
+    # the driver never reached its deadline: the failed job ended the wait
+    assert time.monotonic() - t0 < budget_ms / 1000
+    assert fresh is False
+    if allow_partial:
+        assert set(names(out).values()) == {"tagged"}
+    else:
+        assert names(out)["foo"] == "foo-val"
+    assert visits(out) == {"foo": 10, "bar": 100, "felix": None}
 
 
 def test_freshen_with_timeout_success(spark):
